@@ -332,6 +332,7 @@ object Bench {
         java.nio.file.StandardOpenOption.APPEND)
     } catch { case e: Throwable => System.err.println(s"bench: scalar ledger: $e") }
     PlanCache.clear(spark)
+    Tables.clear(spark)
     spark.stop()
     // rc=1 only when the run as a whole is unusable (no query produced a
     // time). A handful of per-query errors is already reported via

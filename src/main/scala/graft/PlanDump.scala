@@ -55,6 +55,7 @@ object PlanDump {
       (meta +: entries).mkString("{\n", ",\n", "\n}\n"))
     println(s"wrote ${entries.size} plan snapshots to $out")
     PlanCache.clear(spark)
+    Tables.clear(spark)
     spark.stop()
   }
 }

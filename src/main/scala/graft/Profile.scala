@@ -23,6 +23,7 @@ object Profile {
         println(f"PROF $name%-28s pass1=$t1%8.2f  pass2=$t2%8.2f")
       }
     PlanCache.clear(spark)
+    Tables.clear(spark)
     spark.stop()
   }
 }

@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   * Explain, StreamDemo, tests): local[min(cpus,32)] with
   * shuffle.partitions = threads, UTC, and the nanos-timestamp read flag
   * set at BUILD time — so reading `events.parquet` is order-independent
-  * (no hidden conf mutation required first; see Tables.events). */
+  * (no hidden conf mutation required first; see Tables.events).
+  * `file:` paths go through graft.io's fork-free local filesystem
+  * (see [[graft.io.NioRawLocalFileSystem]]). */
 object Sessions {
   def defaultCpus: Int = math.min(Runtime.getRuntime.availableProcessors, 32)
 
@@ -17,5 +19,6 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(graft.io.LocalFileSystems.sparkConf)
       .getOrCreate()
 }

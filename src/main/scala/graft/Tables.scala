@@ -36,6 +36,16 @@ object Tables {
       spark.read.parquet(s"$dir/$name.parquet"))
   }
 
+  /** Drop every relation this session resolved; called wherever
+    * `PlanCache.clear` releases the session's seams, so a stopped
+    * session's entries do not outlive it. */
+  def clear(spark: SparkSession): Unit = {
+    val sid = org.apache.spark.sql.graft.bridge.sessionUUID(spark)
+    resolved.keys.filter(_._1 == sid).foreach(resolved.remove)
+  }
+
+  private[graft] def resolvedCount: Int = resolved.size
+
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame  = table(s, d, "customer")

@@ -30,6 +30,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       oracleJson(selected))
     PlanCache.clear(spark)
+    Tables.clear(spark)
     spark.stop()
   }
 

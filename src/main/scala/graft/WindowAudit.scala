@@ -56,6 +56,7 @@ object WindowAudit {
     }
     println(s"WINDOW0 total: $hits unpartitioned window nodes")
     PlanCache.clear(spark)
+    Tables.clear(spark)
     spark.stop()
   }
 }

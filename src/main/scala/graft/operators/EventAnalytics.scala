@@ -103,6 +103,7 @@ object EventAnalytics {
     * is exact cross-engine. */
   def rollingActiveUsers(spark: SparkSession, dir: String,
                          windowDays: Int = 7): DataFrame = {
+    require(windowDays > 0, s"rollingActiveUsers: bad window $windowDays")
     // ROUND-18 SHAVE (§3): same bounded-explode replacement of the
     // day-dimension nested-loop range join as q145 (see stickiness);
     // the distinct (user, day) collapse now rides the shared
@@ -138,6 +139,7 @@ object EventAnalytics {
     * |days|-row. */
   def stickiness(spark: SparkSession, dir: String,
                  windowDays: Int = 7): DataFrame = {
+    require(windowDays > 0, s"stickiness: bad window $windowDays")
     val pairs = graft.PlanCache.cached(spark, s"events.userDayPairs:$dir") {
       Tables.events(spark, dir)
         .select(col("user_id"), to_date(col("ts")).as("day")).distinct()

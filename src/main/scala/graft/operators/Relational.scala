@@ -606,6 +606,8 @@ object Relational {
       parentKeys("orders->customer", Tables.customer(spark, dir), "c_custkey"),
       parentKeys("supplier->nation", Tables.nation(spark, dir), "n_nationkey"))
       .reduce(_ unionByName _)
+      // a NULL child FK matches no parent, as in the twin's LEFT JOIN
+      .filter(col("k").isNotNull)
     val nameOf = FkRelationships.zipWithIndex
       .map { case (n, i) => s"WHEN $i THEN '$n'" }.mkString(" ")
     children.withColumn("w", lit(1L))
@@ -614,11 +616,14 @@ object Relational {
       .agg(sum(col("w")).as("cnt"), max(lit(1L) - col("w")).as("hit"))
       .filter(col("cnt") > 0)
       .groupBy(col("rel"))
+      // the NULL-key group's rows are orphan rows, but, like the twin's
+      // count(DISTINCT), neither key count includes NULL
       .agg(sum(col("cnt")).as("n_child_rows"),
-        count(lit(1)).as("n_child_keys"),
+        count(col("k")).as("n_child_keys"),
         sum(when(col("hit") === 0L, col("cnt")).otherwise(0L))
           .as("n_orphan_rows"),
-        sum(when(col("hit") === 0L, 1L).otherwise(0L)).as("n_orphan_keys"))
+        sum(when(col("hit") === 0L && col("k").isNotNull, 1L).otherwise(0L))
+          .as("n_orphan_keys"))
       .select(expr(s"CASE rel $nameOf END").as("relationship"),
         col("n_child_rows"), col("n_child_keys"),
         col("n_orphan_rows"), col("n_orphan_keys"))

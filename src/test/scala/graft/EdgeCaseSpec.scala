@@ -152,6 +152,44 @@ class EdgeCaseSpec extends SparkSpec {
       .forall(_ == (0L, 0L)), "no other relationship may fire")
   }
 
+  test("integrity audit (q137): NULL child FKs are orphans, as in the LEFT JOIN twin") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fk_null").toString
+    def w(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
+    val day = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    w("region", Seq((0, "r")).toDF("r_regionkey", "r_name"))
+    w("nation", Seq((0, "n", Option(0)), (1, "m", None))
+      .toDF("n_nationkey", "n_name", "n_regionkey"))
+    // a NULL parent key must not "match" the NULL child keys below
+    w("customer", Seq((Option(1L), "c", 0, 0.0, "m"), (None, "ghost", 0, 0.0, "m"))
+      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
+    w("supplier", Seq((1L, "s", 0, 0.0))
+      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal"))
+    w("part", Seq((1L, "p", "b", "t", 1, 1.0))
+      .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"))
+    w("orders", Seq((10L, Option(1L), "O", 1.0, day, "1"),
+        (11L, None, "O", 1.0, day, "1"), (12L, None, "O", 1.0, day, "1"))
+      .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderdate", "o_orderpriority"))
+    w("lineitem", Seq((10L, 1L, 1L, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", day))
+      .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
+        "l_returnflag", "l_linestatus", "l_shipdate"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      r.getAs[String]("relationship") -> Seq("n_child_rows", "n_child_keys",
+        "n_orphan_rows", "n_orphan_keys").map(c => r.getAs[Long](c))).toMap
+    val got = rows(graft.operators.Relational.integrityAudit(spark, dir))
+    // (child rows, child keys, orphan rows, orphan keys): NULLs are orphan
+    // rows, but count(DISTINCT) counts no NULL key
+    assert(got("orders->customer") == Seq(3L, 1L, 2L, 0L))
+    assert(got("nation->region") == Seq(2L, 1L, 1L, 0L))
+    // the twin's own SQL, run by Spark over the same tables
+    val s = spark.newSession()
+    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
+      .foreach(t => s.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t))
+    assert(got == rows(s.sql(graft.operators.Relational.integrityAuditSql)))
+  }
+
   test("bm25 on a corpus with zero query-term hits returns zero rows, no error") {
     val dir = writeDocs(Seq((1L, "nothing matches here", "en", "src0")))
     assert(graft.operators.TextAnalysis.bm25TopK(spark, dir).collect().isEmpty)

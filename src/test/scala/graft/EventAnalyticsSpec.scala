@@ -547,6 +547,19 @@ class EventAnalyticsSpec extends SparkSpec {
       .select("user_id").distinct().count())
   }
 
+  test("rolling active users (q76) and stickiness (q145) reject windowDays <= 0") {
+    // a non-positive window would explode each day into a DESCENDING
+    // sequence (fan-out to past days) instead of an empty window
+    for (w <- Seq(0, -1)) {
+      val a = intercept[IllegalArgumentException](
+        EventAnalytics.rollingActiveUsers(spark, sf0001, windowDays = w))
+      assert(a.getMessage.contains(s"bad window $w"))
+      val b = intercept[IllegalArgumentException](
+        EventAnalytics.stickiness(spark, sf0001, windowDays = w))
+      assert(b.getMessage.contains(s"bad window $w"))
+    }
+  }
+
   test("rolling active users: window-1 equals DAU, window-7 dominates it, bounded by total") {
     import org.apache.spark.sql.functions._
     val dau = EventAnalytics.rollingActiveUsers(spark, sf0001, windowDays = 1)

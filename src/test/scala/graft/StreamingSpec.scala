@@ -2320,6 +2320,34 @@ class StreamingSpec extends SparkSpec {
     assert(dataBatches.map(_.numInputRows).toSeq == Seq(2L, 1L, 1L, 1L))
   }
 
+  test("V2 replay source: AvailableNow keeps maxFilesPerTrigger and lands windows (S1/T2)") {
+    val src = Files.createTempDirectory("graft_v2_avnow").toString
+    val out = Files.createTempDirectory("graft_v2_avnow_out").toString
+    val chk = Files.createTempDirectory("graft_v2_avnow_chk").toString
+    // one on-track tweet per file, 20 minutes apart: each later file moves
+    // the 10-minute watermark past the earlier files' 60 s windows
+    Seq("10:00:05", "10:20:05", "10:40:05", "11:00:05").zipWithIndex.foreach { case (t, i) =>
+      Files.write(java.nio.file.Paths.get(src, f"f$i%02d.json"),
+        (s"""{"text":"spark is good $i","lang":"en","created_at":"2024-01-01T${t}Z",""" +
+          """"entities":{"hashtags":[]}}""" + "\n").getBytes("UTF-8"))
+    }
+    val spec = Pipeline.SourceSpec("tweet-replay", path = Some(src),
+      options = Map("maxFilesPerTrigger" -> "1"))
+    val q = Pipeline.writeParquet(Pipeline.sentimentCounts(
+      Pipeline.scoreTweets(Pipeline.readTweets(spark, spec), "en", "#spark")),
+      out, chk, Trigger.AvailableNow())
+    try assert(q.awaitTermination(120000L), "an AvailableNow query must terminate on its own")
+    finally q.stop()
+    val dataBatches = q.recentProgress.filter(_.numInputRows > 0)
+    assert(dataBatches.map(_.numInputRows).toSeq == Seq(1L, 1L, 1L, 1L),
+      "4 files at 1 file/trigger must take 4 data batches under AvailableNow")
+    val landed = spark.read.parquet(out)
+    assert(landed.count() > 0L, "finalized windows must reach the sink")
+    assert(landed.select("window_start").collect().map(_.getTimestamp(0).toInstant.toString).toSet
+      .subsetOf(Set("2024-01-01T10:00:00Z", "2024-01-01T10:20:00Z", "2024-01-01T10:40:00Z")),
+      "only windows behind the final watermark may land")
+  }
+
   test("V2 replay source: restart resumes from the checkpointed offset (S1/T5)") {
     val src = Files.createTempDirectory("graft_v2_restart").toString
     val out = Files.createTempDirectory("graft_v2_restart_out").toString

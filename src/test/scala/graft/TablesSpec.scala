@@ -36,6 +36,19 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("Tables.clear evicts a session's resolved relations, and only its own") {
+    val before = Tables.resolvedCount
+    val (s1, s2) = (spark.newSession(), spark.newSession())
+    Tables.region(s1, sf0001); Tables.nation(s1, sf0001)
+    val kept = Tables.region(s2, sf0001)
+    assert(Tables.resolvedCount == before + 3)
+    Tables.clear(s1)
+    assert(Tables.resolvedCount == before + 1, "clear(s1) must drop s1's two entries")
+    assert(Tables.region(s2, sf0001) eq kept, "clear(s1) must keep s2's entry")
+    Tables.clear(s2)
+    assert(Tables.resolvedCount == before)
+  }
+
   test("events.ts reads the same instants under a non-UTC session zone") {
     // the NTZ branch must be zone-independent like the nanos branch: a
     // user-supplied session in another zone reads identical instants
