@@ -20,22 +20,29 @@ object Bench {
     *      comparable to v2 (v2 gains warm page-cache/JIT on pass 2). */
   private val Protocol = 2
 
+  /** A pass that starts while the 1-min load average exceeds this is
+    * suspect: r6's five inflated queries all ran inside one load window
+    * (load_avg 3.42 from the driver's own tooling). On an otherwise-idle
+    * box this bench itself contributes ~1 to the 1-min average, so 2.0
+    * means "something else is competing". */
+  private val LoadMax = 2.0
+
   def main(args: Array[String]): Unit = {
+    val rc = QueryRunner.withSession(measure)
+    if (rc != 0) sys.exit(rc)
+  }
+
+  /** The whole run on `spark`; returns the process exit code, so the
+    * session is torn down before the JVM exits. */
+  private def measure(spark: SparkSession): Int = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
-      .getOrElse(Sessions.defaultCpus)
-    val spark = Sessions.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    // Full materialization of every result column via the noop sink —
-    // .count() would let ColumnPruning strip unreferenced aggregate
-    // expressions and under-measure the real query cost.
-    def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-            dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
+    val queries = QueryRunner.selected(Nil)
+    def run(fn: QueryRunner.Query, dir: String): Unit =
+      QueryRunner.materialize(fn(spark, dir))
     // Warm up codegen/JIT/classloading on the tiny SF so the timings below
     // measure the engine, not first-query JVM warmup (~17 s cold).
     val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
+    queries.foreach { case (_, fn) =>
       try { run(fn, warmDir) } catch { case _: Throwable => () }
     }
     val errors = scala.collection.mutable.ListBuffer.empty[String]
@@ -94,16 +101,7 @@ object Bench {
     // over 79.
     val oldSpqSeries: List[Double] = histSeries("_spq_series")
     val oldNqSeries: List[Double] = histSeries("_nq_series")
-    // A pass that starts while the 1-min load average exceeds this is
-    // suspect: r6's five inflated queries all ran inside one load window
-    // (load_avg 3.42 from the driver's own tooling). On an otherwise-idle
-    // box this bench itself contributes ~1 to the 1-min average, so 2.0
-    // means "something else is competing".
-    val loadMax = sys.env.get("SPARK_GRAFT_BENCH_LOAD_MAX")
-      .flatMap(_.toDoubleOption).getOrElse(2.0)
-    def onePass(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                recordErr: Boolean): (Double, Double, Long) = {
+    def onePass(name: String, fn: QueryRunner.Query, recordErr: Boolean): (Double, Double, Long) = {
       val ld = loadAvg(); val ms = System.currentTimeMillis()
       val t0 = System.nanoTime()
       try { run(fn, sfDir); ((System.nanoTime() - t0) / 1e9, ld, ms) }
@@ -121,13 +119,7 @@ object Bench {
     // and reuse it in pass 2 — the min therefore measures steady-state
     // cost, which is the honest number for a persisted index.
     val meta = scala.collection.mutable.LinkedHashMap.empty[String, Meta]
-    // SORTED execution order: Map iteration order reshuffles whenever
-    // keys are added, silently moving the cost of shared PlanCache
-    // seams between queries round-over-round (q86 drifted 1.4x in r13,
-    // q148/q28 in r14, purely from who pays the seam first). Sorted
-    // order is stable under appends, so per-query times stay
-    // comparable across rounds.
-    val results0 = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results0 = queries.map { case (name, fn) =>
       // A failing query must surface, not silently record a near-zero
       // time that deflates the total: it lands in "errors" with time -1.
       val (t1, l1, m1) = onePass(name, fn, recordErr = true)
@@ -172,7 +164,7 @@ object Bench {
       case (name, t) if robust(t) >= 0 &&
         (history.get(name).exists(h =>
            h > 0 && robust(t) > 3 * h && robust(t) - h > 0.2) ||
-         meta(name).loads.nonEmpty && meta(name).loads.forall(_ > loadMax)) =>
+         meta(name).loads.nonEmpty && meta(name).loads.forall(_ > LoadMax)) =>
         name
     }.toList
     val requeued = suspicious.map { name =>
@@ -331,20 +323,18 @@ object Bench {
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     } catch { case e: Throwable => System.err.println(s"bench: scalar ledger: $e") }
-    PlanCache.clear(spark)
-    Tables.clear(spark)
-    spark.stop()
     // rc=1 only when the run as a whole is unusable (no query produced a
     // time). A handful of per-query errors is already reported via
     // n_errors + the errors list — failing the process over them cost
     // r10 its whole artifact (rc=1 + tail-truncated stdout).
-    if (nq == 0) sys.exit(1)
+    if (nq == 0) 1
     // Partial-failure strictness is OPT-IN: the default rc stays lenient
     // (r10 lost its whole artifact to rc=1 + tail truncation; the driver
     // reads n_errors from the summary line instead). A CI gate that wants
     // hard failure on ANY query error sets SPARK_GRAFT_BENCH_STRICT=1 and
     // keys on the distinct exit code 2.
-    if (errors.nonEmpty && sys.env.get("SPARK_GRAFT_BENCH_STRICT")
-          .exists(v => v == "1" || v.equalsIgnoreCase("true"))) sys.exit(2)
+    else if (errors.nonEmpty && sys.env.get("SPARK_GRAFT_BENCH_STRICT")
+          .exists(v => v == "1" || v.equalsIgnoreCase("true"))) 2
+    else 0
   }
 }

@@ -1,26 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: dumps `.explain("formatted")` for every declared query so
   * the physical plans can be reviewed for scan pruning (PushedFilters /
   * ReadSchema), join strategy (broadcast vs sort-merge), and codegen
   * coverage (WholeStageCodegen spans). Run:
-  * `sbt "runMain graft.Explain /root/testdata/sf0.01"`. */
+  * `sbt "runMain graft.Explain /root/testdata/sf0.01 [qNN...]"`; the
+  * session follows `SPARK_GRAFT_CPUS` like every other main. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    // optional name filter (like Verify): explain only the named queries
-    val only = args.drop(1).toSet
-    val spark = Sessions.local(4)
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
+    val queries = QueryRunner.selected(args.drop(1).toSeq)
+    QueryRunner.withSession { spark =>
+      queries.foreach { case (name, fn) =>
         println(s"\n======== $name ========")
         try fn(spark, sfDir).explain("formatted")
         catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
       }
-    spark.stop()
+    }
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Programmatic scale-red-flag audit of a DataFrame's physical plan —
   * the same checks PlanAuditSpec sweeps every declared query with,
@@ -14,7 +17,8 @@ import org.apache.spark.sql.DataFrame
   * These are the plan shapes that stay invisible at test scale and
   * explode at 1000 executors: an unbounded all-pairs join, a broadcast
   * nested-loop whose build side isn't provably tiny, and a window
-  * sorting the whole dataset in one task.
+  * sorting the whole dataset in one task — a cached build plan's
+  * unpartitioned window included.
   */
 object PlanAudit {
 
@@ -45,8 +49,26 @@ object PlanAudit {
     }
     if (badWindow)
       flags += "Window over SinglePartition: whole-dataset single-task sort"
+    // a Window / WindowGroupLimit with an EMPTY partition spec moves its
+    // whole input to one task ("No Partition Defined"). Unlike the checks
+    // above this one descends into cached build plans too: PlanCache seam
+    // builders are where such a window would hide.
+    flags ++= withCached(df.queryExecution.executedPlan).collect {
+      case w: WindowExec if w.partitionSpec.isEmpty =>
+        w.windowExpression.map(_.sql.take(80)).mkString("; ")
+      case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
+        s"group-limit rank<=${w.limit}"
+    }.distinct.map(w => s"Unpartitioned window ($w): whole input in one task")
     flags.result()
   }
+
+  /** The nodes of `p` as [[planLines]] walks them, plus the nodes of
+    * every cached (InMemoryRelation) build plan reachable from it. */
+  private def withCached(p: SparkPlan): Seq[SparkPlan] =
+    org.apache.spark.sql.graft.bridge.planNodes(p).flatMap {
+      case s: InMemoryTableScanExec => s +: withCached(s.relation.cachedPlan)
+      case n => Seq(n)
+    }
 
   /** One (node, description-line) pair per node of `df`'s executed plan
     * tree — AQE wrappers and query stages unwrapped, cached

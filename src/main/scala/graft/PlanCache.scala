@@ -37,12 +37,15 @@ object PlanCache {
     entries.getOrElseUpdate((sid(spark), key),
       build.persist(StorageLevel.MEMORY_AND_DISK))
 
-  /** Unpersist and drop every entry this session pinned. Blocking=false:
-    * eviction proceeds asynchronously, callers don't wait on it. */
+  /** Unpersist and drop every entry this session pinned, and the
+    * relations it resolved through [[Tables]] — one call ends the
+    * session's reuse of intermediates. Blocking=false: eviction proceeds
+    * asynchronously, callers don't wait on it. */
   def clear(spark: SparkSession): Unit = {
     val s = sid(spark)
     entries.keys.filter(_._1 == s).foreach { k =>
       entries.remove(k).foreach(_.unpersist(blocking = false))
     }
+    Tables.clear(spark)
   }
 }

@@ -3,14 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Single session factory for every entry point (Verify, Bench, App,
-  * Explain, StreamDemo, tests): local[min(cpus,32)] with
+  * Explain, StreamDemo, tests): local[cpus] with
   * shuffle.partitions = threads, UTC, and the nanos-timestamp read flag
   * set at BUILD time — so reading `events.parquet` is order-independent
   * (no hidden conf mutation required first; see Tables.events).
   * `file:` paths go through graft.io's fork-free local filesystem
   * (see [[graft.io.NioRawLocalFileSystem]]). */
 object Sessions {
-  def defaultCpus: Int = math.min(Runtime.getRuntime.availableProcessors, 32)
+  /** `SPARK_GRAFT_CPUS` when set to an integer, else min(cores, 32). */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
+    .getOrElse(math.min(Runtime.getRuntime.availableProcessors, 32))
 
   def local(cpus: Int = defaultCpus): SparkSession =
     SparkSession.builder()

@@ -36,9 +36,9 @@ object Tables {
       spark.read.parquet(s"$dir/$name.parquet"))
   }
 
-  /** Drop every relation this session resolved; called wherever
-    * `PlanCache.clear` releases the session's seams, so a stopped
-    * session's entries do not outlive it. */
+  /** Drop every relation this session resolved. `PlanCache.clear` calls
+    * it, so the one call that releases a session's seams also keeps its
+    * resolved relations from outliving it. */
   def clear(spark: SparkSession): Unit = {
     val sid = org.apache.spark.sql.graft.bridge.sessionUUID(spark)
     resolved.keys.filter(_._1 == sid).foreach(resolved.remove)

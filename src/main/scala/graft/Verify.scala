@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,26 +11,20 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     // optional name filter for local iteration; the driver always passes
     // exactly two args and gets the full surface
-    val only = args.drop(2).toSet
-    def selected(name: String): Boolean = only.isEmpty || only.contains(name)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
-      .getOrElse(Sessions.defaultCpus)
-    val spark = Sessions.local(cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name))
+    val only = args.drop(2).toSeq
+    val queries = QueryRunner.selected(only)
+    QueryRunner.withSession { spark =>
+      new java.io.File(outDir).mkdirs()
+      queries.foreach { case (name, fn) =>
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
+      }
+      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+        oracleJson(name => only.isEmpty || only.contains(name)))
     }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      oracleJson(selected))
-    PlanCache.clear(spark)
-    Tables.clear(spark)
-    spark.stop()
   }
 
   /** `oracle_sql.json` body for the selected queries — shared by the

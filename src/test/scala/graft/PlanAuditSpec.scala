@@ -8,6 +8,7 @@ package graft
   *  - a BroadcastNestedLoopJoin that is not one of the audited tiny-side
   *    crosses (query-point sets, centroid tables, single-row counts),
   *  - a Window over SinglePartition (a corpus-sized single-task sort),
+  *  - a Window with no partition spec, cached build plans included,
   *  - a documents/lineitem parquet scan that reads every column for a
   *    narrower projection (pushdown/pruning silently lost).
   *
@@ -56,6 +57,19 @@ class PlanAuditSpec extends SparkSpec {
     assert(PlanAudit.redFlags(globalWin)
       .exists(_.contains("SinglePartition")),
       "an unpartitioned window must trip the audit")
+    // the same global window behind a PlanCache seam: the query above the
+    // cache sees only an InMemoryTableScan, so the audit must descend
+    // into the cached build plan to find it
+    val s = spark.newSession()
+    try {
+      val seam = PlanCache.cached(s, "planted_global_window")(
+        s.range(4).toDF("x").withColumn("rn",
+          org.apache.spark.sql.functions.row_number().over(w)))
+      val flags = PlanAudit.redFlags(
+        seam.filter(org.apache.spark.sql.functions.col("rn") > 1))
+      assert(flags.exists(_.contains("Unpartitioned window")),
+        s"a cached unpartitioned window must trip the audit: $flags")
+    } finally PlanCache.clear(s)
   }
 
   test("bounded-broadcast claims: every migrated BNLJ entry registers a claim and the data honors it") {

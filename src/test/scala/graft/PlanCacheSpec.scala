@@ -39,4 +39,20 @@ class PlanCacheSpec extends SparkSpec {
       PlanCache.clear(s2)
     }
   }
+
+  test("clear also drops the session's resolved tables, and only its own") {
+    val (s1, s2) = (spark.newSession(), spark.newSession())
+    try {
+      Tables.region(s1, sf0001); Tables.nation(s1, sf0001)
+      val kept = Tables.region(s2, sf0001)
+      val before = Tables.resolvedCount
+      PlanCache.clear(s1)
+      assert(Tables.resolvedCount == before - 2,
+        "clear(s1) must drop exactly s1's two resolved tables")
+      assert(Tables.region(s2, sf0001) eq kept, "clear(s1) must keep s2's entry")
+    } finally {
+      PlanCache.clear(s1)
+      PlanCache.clear(s2)
+    }
+  }
 }
